@@ -28,28 +28,13 @@ import scala.util.{Failure, Success, Try}
 object Bench {
 
   def session(cpus: String): SparkSession = {
+    val s = core.Engine.session(s"local[$cpus]")
     // SPARK_GRAFT_SHUFFLE pins the shuffle width independently of core
     // count: the two-cluster-size scaling runs use the SAME partition count
     // at local[8] and local[32] so the shuffle structure is identical and
     // only the executor parallelism varies (smaller tasks also balance
     // better under bursty hypervisor steal)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", parts)
-      // STATIC conf (first session in the JVM wins): the default generated-
-      // class cache is a 100-entry LRU; this bench interleaves ~12 query
-      // families (~150 distinct codegen units), so at the default size every
-      // round recompiles ~21 classes per entry (measured via
-      // SPARK_GRAFT_CODEGEN_STATS) — pure janino time that a single-family
-      // production job never pays. Sizing the cache to the working set is
-      // the standard knob on a real shared cluster too.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(s.conf.set(core.Engine.ShufflePartitions, _))
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -110,8 +95,8 @@ object Bench {
   }
 
   /** steady-state seconds: one warm-up execution, then the timed one
-    * (used by ScalingBench / ScaleProbe; main() below uses its own
-    * interleaved-repetition scheme). */
+    * (used by ScalingBench; main() below uses its own interleaved-repetition
+    * scheme). */
   def timeIt(df: DataFrame): Double = {
     df.write.format("noop").mode("overwrite").save()
     runOnce(df)

@@ -8,8 +8,8 @@ import graft.plans.TileIdPoint
 /** SQL-facing registration of the engine's native expressions, so
   * `spark.sql("SELECT graft_tile_id(lon, lat) ...")` works — either on an
   * existing session via [[GraftFunctions.register]] or at session build time
-  * through [[GraftExtensions]]
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * through [[GraftExtensions]] (a builder's
+  * `withExtensions(new GraftExtensions)`, or `spark.sql.extensions`).
   */
 object GraftFunctions {
 

@@ -143,15 +143,14 @@ object OmaCli {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    // getOrCreate: under spark-submit the session comes preconfigured from
-    // the cluster; standalone runs fall back to these local defaults. Only
-    // stop() a session this CLI itself created — in a shared JVM (tests)
-    // stopping a pre-existing session would kill other suites' work.
+    // spark-submit passes its --master as the spark.master system property;
+    // a plain `java` launch runs on local[*]. A session that already exists
+    // (a shared JVM, as in tests) is used as it is and never stopped here:
+    // stopping it would kill other suites' work.
     val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = SparkSession.builder()
-      .appName("omaspark-convert")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+      .filterNot(_.sparkContext.isStopped)
+    val spark = preExisting.getOrElse(
+      graft.core.Engine.session(sys.props.getOrElse("spark.master", "local[*]")))
     if (a.verbose == 0) spark.sparkContext.setLogLevel("WARN")
 
     // format dispatch (reference OSMReader.getReader): XML, O5M or PBF by
@@ -167,7 +166,10 @@ object OmaCli {
         val b = new Array[Byte](n); raf.readFully(b); b
       } finally raf.close()
     }
-    if (a.verbose >= 1) System.err.println(s"converting ${a.input} -> ${a.output}")
+    if (a.verbose >= 1) {
+      System.err.println(graft.core.Engine.describe(spark))
+      System.err.println(s"converting ${a.input} -> ${a.output}")
+    }
     // streamed sink: executors write chunk-body part files, the driver
     // stream-concatenates — driver memory stays O(chunk table)
     val table =

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runtime evidence for the AQE behaviors the engine relies on at scale
@@ -10,31 +9,11 @@ import org.apache.spark.sql.functions._
   * post-shuffle data, and skew-join splitting of a hot-key partition.
   *
   * The session is SHARED with other suites in the JVM, so every scaled-down
-  * threshold is set through [[withConf]] — saved and restored around each
-  * test — rather than baked into the builder (which would leak
-  * shuffle.partitions=200 etc. into whichever suite runs next and make the
-  * run order-sensitive).
+  * threshold is set through `withConf` — saved and restored around each
+  * test — so shuffle.partitions=200 etc. never leak into whichever suite
+  * runs next.
   */
-class AqeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("aqe-spec")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** Apply SQL confs for the duration of `body`, restoring the previous
-    * value (or unsetting) afterwards. */
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+class AqeSpec extends AnyFunSuite with SparkSuite {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 import scala.sys.process._
 import graft.oma._
@@ -18,14 +17,7 @@ import graft.oma._
   * coordinates on every XML cycle, while the binary formats carry exact
   * fixed-point ints — precisely the fidelity gain of the binary paths.
   */
-class BinaryGoldenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BinaryGoldenSpec extends AnyFunSuite with SparkSuite {
 
   def runOracle(bytes: Array[Byte], ext: String): OmaFile = {
     val dir = Files.createTempDirectory("omabin")

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.DocQueries
 
@@ -10,14 +9,7 @@ import graft.operators.DocQueries
   * HashMin + pointer-jump loop must produce IDENTICAL labels — the cap is a
   * performance switch, never a semantics switch.
   */
-class CcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CcSpec extends AnyFunSuite with SparkSuite {
 
   /** bidirectional edge frame from undirected pairs */
   private def edges(pairs: Seq[(Long, Long)]) = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.GeoQueries
 
@@ -12,13 +11,7 @@ import graft.operators.GeoQueries
   * dist == r is inclusive, and the plan never degenerates to a
   * cartesian/nested-loop join.
   */
-class DistJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DistJoinSpec extends AnyFunSuite with SparkSuite {
 
   private val R = 1000L
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.plans.{DistTopK, TopKBuf}
@@ -11,14 +10,7 @@ import graft.plans.{DistTopK, TopKBuf}
   * counting every candidate, and its buffer must survive the partial/final
   * serialization cycle.
   */
-class DistTopKSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DistTopKSpec extends AnyFunSuite with SparkSuite {
 
   test("agrees with the window formulation on a tie-heavy frame") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.EmbedQueries
 
 /** Quality properties of the ANN scale path that the bit-exact oracle gate
@@ -16,14 +15,7 @@ import graft.operators.EmbedQueries
   *    WORST case for LSH (top-k is noise), so the floor is modest; real
   *    embedding corpora are clustered and bucket recall rises with them.
   */
-class EmbedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EmbedSpec extends AnyFunSuite with SparkSuite {
 
   def ann = EmbedQueries.defs.find(_.name == "e_ann_topk").get
   def brute = EmbedQueries.defs.find(_.name == "e_topk_mips").get

@@ -5,13 +5,10 @@ import org.apache.spark.sql.SparkSession
 import graft.core.Bbs
 import graft.operators.GeoQueries
 
-class FunctionsSpec extends AnyFunSuite {
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "2")(super.withFixture(test))
 
   test("graft_tile_id / graft_pip_mask / cell encoders are SQL-callable") {
     functions.GraftFunctions.register(spark)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.PortableHash
@@ -14,14 +13,7 @@ import graft.operators.{HexCells, KnnHex}
   * provably-complete top-k. Also pins the exact ring-distance geometry the
   * certification bound is built on.
   */
-class KnnHexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KnnHexSpec extends AnyFunSuite with SparkSuite {
 
   test("minRingDist: exact min distance to ring-h cells (valley vertices, not inradius)") {
     val r0 = HexCells.radius(3)

@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.lineage.TileLineage
 import graft.sources.ImageTable
 import graft.operators.GeoQueries
 
-class LineageSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineageSpec extends AnyFunSuite with SparkSuite {
 
   def tiled = ImageTable.df(spark, "/root/testdata/sf0.001")
     .select(col("image_id"), col("lon"), col("lat"), GeoQueries.tileCol.as("tile"))

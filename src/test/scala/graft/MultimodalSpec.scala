@@ -1,19 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.{ImageCodec, ImageTable}
 import graft.operators.MultimodalQueries
 
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
 
   test("codec: raw round-trips byte-exact, qrle meets the 40 dB invariant") {
     for (i <- 0 until 50) {

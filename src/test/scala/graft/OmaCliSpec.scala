@@ -6,8 +6,10 @@ import graft.oma._
 
 /** The spark-submit conversion CLI: flag surface mirrors the reference
   * (Oma.java:139-242) and the end-to-end run produces a parseable .oma.
+  * The shared session exists before the CLI runs, so the CLI converts on it
+  * instead of creating the JVM's SparkContext with its own settings.
   */
-class OmaCliSpec extends AnyFunSuite {
+class OmaCliSpec extends AnyFunSuite with SparkSuite {
 
   test("argument parsing mirrors the reference surface") {
     val tmp = Files.createTempDirectory("omacli")
@@ -61,10 +63,17 @@ class OmaCliSpec extends AnyFunSuite {
     Files.writeString(in, OsmXml.write(Fixtures.fixture))
     val out = tmp.resolve("fixture.oma")
     val bbs = tmp.resolve("f.bbs"); Files.writeString(bbs, Fixtures.smallBbs)
-    // spark.master injected by spark-submit in production; set for the test
-    System.setProperty("spark.master", "local[2]")
-    try OmaCli.main(Array("-b", bbs.toString, "-p", "all", in.toString, out.toString))
-    finally System.clearProperty("spark.master")
+    assert(spark.sparkContext.master == "local[4]")
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try OmaCli.main(Array("-v", "-b", bbs.toString, "-p", "all", in.toString, out.toString))
+    finally System.setErr(stderr)
+    // -v names the engine settings the conversion ran with, on one line
+    val engine = err.toString.linesIterator.filter(_.startsWith("engine: ")).toSeq
+    assert(engine == Seq("engine: spark.master=local[4] spark.shuffle.compress=false " +
+      "spark.shuffle.sort.bypassMergeThreshold=1 spark.sql.shuffle.partitions=4 " +
+      "spark.sql.codegen.cache.maxEntries=2000"), err.toString)
     val parsed = OmaReader.read(Files.readAllBytes(out))
     assert(parsed.chunks.nonEmpty)
     assert(parsed.chunks.flatMap(_.blocks).flatMap(_.slices).map(_.elements.size).sum > 0)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.sys.process._
 import graft.core.Bbox
@@ -13,14 +12,7 @@ import graft.oma._
   * and slice structure, and per-slice element sequences (tags compared as
   * sets: the reference's HashMap serialization order is arbitrary).
   */
-class OmaGoldenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OmaGoldenSpec extends AnyFunSuite with SparkSuite {
 
   import Fixtures.{fixture, smallBbs}
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.core.Bbox
 import graft.oma._
@@ -10,14 +9,7 @@ import graft.oma._
   * pruning (chunks outside the query bbox are never read or decoded), and
   * full-scan equivalence with the reference-grade OmaReader.
   */
-class OmaScanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OmaScanSpec extends AnyFunSuite with SparkSuite {
 
   lazy val omaBytes: Array[Byte] = OmaPipeline.run(spark, OsmXml.write(Fixtures.fixture),
     Fixtures.smallBbs, TypeConfig.Minimal, features = 31, zip = true, oneElement = false).bytes

@@ -3,7 +3,6 @@ package graft
 import java.io.{ByteArrayInputStream, InputStream}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.oma._
 import graft.sources.RangeStore
 
@@ -19,14 +18,7 @@ import graft.sources.RangeStore
   *    range-read stays inside the ranges the skim produced — the contract a
   *    shared-storage (HDFS/S3) deployment plugs into.
   */
-class OsmSourceStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OsmSourceStreamSpec extends AnyFunSuite with SparkSuite {
 
   lazy val o5mBytes: Array[Byte] = O5m.write(Fixtures.fixture, resetEvery = 3)
   lazy val pbfBytes: Array[Byte] = Pbf.write(Fixtures.fixture, perBlock = 4)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.PhashDup
 
@@ -12,13 +11,7 @@ import graft.operators.PhashDup
   * from candidate generation without affecting pairs that also collide in
   * an uncapped band.
   */
-class PhashDupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PhashDupSpec extends AnyFunSuite with SparkSuite {
 
   private def pairs(rows: Seq[(String, Long)], cap: Int = PhashDup.BucketCap) = {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Geo
 import graft.operators.{Pip, PipKernels, PreparedPolygon}
@@ -14,13 +13,7 @@ import graft.operators.{Pip, PipKernels, PreparedPolygon}
   * 63-polygon bitmap cap are served, and the plan never degenerates to a
   * cartesian/nested-loop join.
   */
-class PipJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipJoinSpec extends AnyFunSuite with SparkSuite {
 
   private def run(pts: Seq[(String, Int, Int)], polys: Array[PreparedPolygon],
       cell: Long): Set[(String, Int)] = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -10,15 +9,11 @@ import org.apache.spark.sql.execution.ExplainMode
   * are column-pruned, the small dim side broadcasts, custom expressions stay
   * inside whole-stage codegen, and the salted aggregation is two-phase.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "false") // pre-execution explain shows codegen markers
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // AQE off: the pre-execution explain then shows the codegen markers
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.adaptive.enabled" -> "false")(super.withFixture(test))
 
   val dir = "/root/testdata/sf0.001"
 
@@ -87,13 +82,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed tables co-locate the tile join: no Exchange in the plan") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       val df = operators.BucketedQueries.colocatedJoin(spark, dir)
       val p = plan(df)
       assert(p.contains("SortMergeJoin"), p)
       assert(!p.contains("Exchange"), p) // both sides bucketed by tile: zero shuffle
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("similarity operators contain no cartesian / nested-loop joins") {

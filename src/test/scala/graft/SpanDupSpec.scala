@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.DocQueries
 
 /** Planted-fixture semantics for the exact substring-span dedup
@@ -9,14 +8,7 @@ import graft.operators.DocQueries
   * another document; consecutive duplicated positions merge into maximal
   * spans whose token length is run + 7.
   */
-class SpanDupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpanDupSpec extends AnyFunSuite with SparkSuite {
 
   private def run(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long)] = {
     import spark.implicits._

@@ -1,20 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The VecSum aggregate (Lloyd centroid-update kernel) must reproduce the
   * posexplode + groupBy(key, dim) formulation it replaced, integer for
   * integer, including the truncating division on negative sums.
   */
-class VecSumSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VecSumSpec extends AnyFunSuite with SparkSuite {
 
   test("VecSum == posexplode sum/count, incl. negative values and tie-free div") {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Geo, PortableHash}
 import graft.operators.ZCells
@@ -12,13 +11,7 @@ import graft.operators.ZCells
   * actually prunes, and a z-sorted parquet table serves the range scan with
   * pushed-down min/max filters.
   */
-class ZorderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZorderSpec extends AnyFunSuite with SparkSuite {
 
   test("interleave: even bits are x, odd bits are y, order-preserving per axis") {
     for (i <- 0 until 200) {
